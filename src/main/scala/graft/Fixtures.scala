@@ -356,7 +356,13 @@ object Fixtures {
               supplierSimNVW(spark, dir); () },
       () => { supplierEdgeSupport(spark, dir); () },
       () => { rmatGraph(spark); () })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    // daemon workers: a wedged chain must not keep the JVM alive after the
+    // main thread exits
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, "fixture-prewarm")
+      t.setDaemon(true)
+      t
+    })
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val fs = chains.map(c => scala.concurrent.Future(c())(ec))

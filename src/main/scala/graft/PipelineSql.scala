@@ -2,8 +2,9 @@ package graft
 
 /** DuckDB oracle SQL for the training-data-pipeline queries (dedup /
   * similarity / text analysis / multimodal). Mirrors graft.pipeline.*
-  * exactly; the portable 60-bit hash is
-  *   Spark : conv(substring(md5(s),1,15),16,10)::long
+  * exactly; the portable 60-bit hash is the top 60 bits of md5(s)
+  *   Spark : graft.functions.Hash60 (TextOps.hash60), bit-equal to
+  *           conv(substring(md5(s),1,15),16,10)::long
   *   DuckDB: CAST('0x' || substr(md5(s),1,15) AS BIGINT)
   */
 object PipelineSql {

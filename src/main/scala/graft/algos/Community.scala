@@ -170,9 +170,11 @@ object Community {
     if (ownsLvlEdges) graft.prims.Release.free(lvlEdges)
     // maxLevel <= 0 means no level ever ran and the lazy flat is still
     // null — return the identity (singleton-community) labels the pre-r12
-    // eager build produced for that degenerate call.
+    // eager build produced for that degenerate call. Materialized like
+    // every other return: callers free `base` (and may free the labels)
+    // right after, so the labels must not read through it.
     if (flat == null)
-      flat = Structure.extractVertexList(base).select(col(ID), col(ID).as("louvain"))
+      flat = Structure.extractVertexList(base).select(col(ID), col(ID).as("louvain")).mat
     (flat, prevQ, level)
   }
 

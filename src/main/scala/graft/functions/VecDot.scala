@@ -1,17 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSessionExtensions
 
-/** Native Catalyst expression for the dense-vector dot product — the one
-  * hot scalar kernel the built-in surface can't express efficiently
+/** Native Catalyst expression for the dense-vector dot product — a hot
+  * scalar kernel the built-in surface can't express efficiently
   * (SURVEY §4: "a native Expression with doGenCode beats a Scala UDF").
   *
   * `aggregate(zip_with(a, b, _*_), 0d, _+_)` allocates an intermediate
@@ -72,16 +70,4 @@ object VecDot {
   /** Column-API entry point. */
   def apply(a: Column, b: Column): Column =
     ColumnShim.column(VecDot(ColumnShim.expression(a), ColumnShim.expression(b)))
-}
-
-/** SQL-surface registration: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * makes `vec_dot(a, b)` available in SQL text (the idiomatic
-  * SparkSessionExtensions injection point). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))))
-  }
 }

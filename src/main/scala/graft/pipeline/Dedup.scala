@@ -32,9 +32,11 @@ object Dedup {
   }
 
   /** Distinct (doc, shingle) rows — the shared input of minhash signatures
-    * and exact Jaccard scoring. The explode + distinct over the corpus is
-    * the dominant cost of the whole LSH pipeline, so pipelines computing
-    * both (minhashLshPairs) build this ONCE, materialized. */
+    * and exact Jaccard scoring. Shingling is one linear pass per document
+    * (the native `Shingles`); the explode + distinct shuffle of every
+    * (doc, shingle) row is what both consumers would otherwise repeat, so
+    * pipelines computing both (minhashLshPairs) build this ONCE,
+    * materialized. */
   def shingleFrame(docs: DataFrame, n: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.select(col(idCol), explode(shingles(tokens(col(textCol)), n)).as("s"))

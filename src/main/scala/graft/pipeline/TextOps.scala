@@ -4,9 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Shared text primitives for the training-data pipeline operators
-  * (dedup / similarity / analysis). Everything here is built from
-  * codegen'd `org.apache.spark.sql.functions` — no UDFs — so filters and
-  * projections stay inside WholeStageCodegen and push down to the scan.
+  * (dedup / similarity / analysis). Everything here is either a built-in
+  * `org.apache.spark.sql.functions` call or a native codegen'd Catalyst
+  * expression from `graft.functions` (Hash60, Shingles, VecDot) — no
+  * UDFs — so filters and projections stay inside WholeStageCodegen and
+  * push down to the scan.
   *
   * Portability contract: every primitive has an exact DuckDB equivalent
   * (documented per function) so the driver's oracle can reproduce results
@@ -15,13 +17,14 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Deterministic 60-bit non-negative hash of a string column.
-    * Spark:  conv(substring(md5(s), 1, 15), 16, 10) :: long
+  /** Deterministic 60-bit non-negative hash of a string column: the top
+    * 60 bits of md5(s), computed by the native `graft.functions.Hash60`.
+    * Equal, bit for bit, to the hex-string form
+    *   conv(substring(md5(s), 1, 15), 16, 10) :: long
     * DuckDB: CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
     * 15 hex digits = 60 bits, so the value always fits in a signed 64-bit
-    * integer and never goes negative. */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    * integer and never goes negative. Null in, null out. */
+  def hash60(c: Column): Column = graft.functions.Hash60(c)
 
   /** Seeded variant: independent hash families for MinHash — the seed is
     * appended before hashing (same trick the reference's MinHash literature
@@ -33,14 +36,14 @@ object TextOps {
   def tokens(text: Column): Column = split(text, " ")
 
   /** Word n-gram shingles as an array of strings (empty when the document
-    * has fewer than n tokens).
+    * has fewer than n tokens or no token array).
     * DuckDB: list_transform(generate_series(1, len(ws)-(n-1)),
-    *                        i -> array_to_string(ws[i:i+n-1], ' ')). */
-  def shingles(ws: Column, n: Int): Column =
-    when(size(ws) >= n,
-      transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")))
-      .otherwise(array())
+    *                        i -> array_to_string(ws[i:i+n-1], ' ')).
+    * Native (`graft.functions.Shingles`, one read of the token array)
+    * because a built-in transform/slice/array_join lambda runs row by row
+    * outside codegen and re-evaluates `ws` — the whole split — for every
+    * shingle: O(tokens²) per document. */
+  def shingles(ws: Column, n: Int): Column = graft.functions.Shingles(ws, n)
 
   /** Cosine similarity between two double-array columns.
     * DuckDB: list_dot_product(a, b) / (sqrt(list_dot_product(a,a)) * ...).

@@ -345,6 +345,20 @@ class AlgoSpec extends SparkSpec {
     assert(math.abs(j((1L, 5L)) - 0.5) < 1e-9)
   }
 
+  test("Louvain maxLevel = 0 returns self-contained singleton labels that can be freed") {
+    // no level runs, so the labels are the identity map over the vertex
+    // list; they must not read through the prepared edge frame louvain
+    // frees before returning, and freeing them must leave g usable
+    val g = wGraphOf(Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0), (3L, 4L, 1.0)),
+      directed = false)
+    val (labels, _) = Community.louvain(g, maxLevel = 0)
+    val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(m == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    graft.prims.Release.free(labels)
+    val comp = Components.wcc(g).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+  }
+
   test("Louvain recovers the two dense blocks") {
     // two 4-cliques joined by one edge
     val k4a = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.functions.VecDot
+import org.apache.spark.sql.graft.ExtensionsShim
+import graft.functions.{GraftExtensions, VecDot}
 
 /** Native vec_dot expression: parity with the HOF formulation, nulls,
   * codegen + SQL registration paths. */
@@ -23,13 +26,16 @@ class VecDotSpec extends SparkSpec {
   }
 
   test("vec_dot is registered in SQL via GraftExtensions injection") {
-    spark.sessionState.functionRegistry.registerFunction(
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.VecDot].getName, "vec_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.VecDot(children(0), children(1)))
-    val r = spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").first()
+    // run the real injection: GraftExtensions fills a SparkSessionExtensions,
+    // whose functions are copied into a fresh session's registry the way
+    // session construction does for spark.sql.extensions
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    assert(!registry.functionExists(FunctionIdentifier("vec_dot")))
+    ExtensionsShim.registerFunctions(ext, registry)
+    val r = session.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").first()
     assert(r.getDouble(0) == 11.0)
   }
 }
